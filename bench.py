@@ -161,6 +161,11 @@ def main() -> None:
     wall0 = time.monotonic()
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # Janino compiles since the JVM started
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def _compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
 
     # Warm every headline pipeline once at the smallest SF so timings
     # measure executor work, not whole-stage-codegen JIT compilation
@@ -170,7 +175,9 @@ def main() -> None:
     # are warm numbers. SPARK_GRAFT_BENCH_WARM=0 skips it for an
     # explicit cold single-shot reading (~1.2x the warm total —
     # JIT + first-scan costs, not a regression).
+    warm_compiles = None
     if os.environ.get("SPARK_GRAFT_BENCH_WARM", "1") != "0":
+        c0 = _compiles()
         warm_dir = "/root/testdata/sf0.001"
         if not os.path.isdir(warm_dir):
             warm_dir = sf_dir
@@ -178,6 +185,7 @@ def main() -> None:
             Q.QUERIES[name](spark, warm_dir).write.format("noop") \
                 .mode("overwrite").save()
         release_persisted()
+        warm_compiles = _compiles() - c0
 
     # Steal-aware acceptance (VERDICT r11 #2): a query whose own timing
     # window saw > STEAL_ACCEPT cores of hypervisor steal was inflated
@@ -193,11 +201,13 @@ def main() -> None:
     max_attempts = 3 if os.environ.get(
         "SPARK_GRAFT_BENCH_STEAL_RETRY", "1") != "0" else 1
 
-    def _timed_attempt(fn) -> tuple[float, float | None]:
+    def _timed_attempt(fn) -> tuple[float, float | None, int]:
         st0 = _steal_ticks()
+        c0 = _compiles()
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
+        compiled = _compiles() - c0
         st1 = _steal_ticks()
         stl = None
         if st0 is not None and st1 is not None and wall > 0:
@@ -209,30 +219,31 @@ def main() -> None:
         # accumulate across queries (and never subsidize a later one
         # or a retry of this one)
         release_persisted()
-        return wall, stl
+        return wall, stl, compiled
 
     timings: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     query_steal: dict[str, float] = {}
     query_attempts: dict[str, list] = {}
     for name in HEADLINE:
         fn = Q.QUERIES[name]
-        attempts: list[tuple[float, float | None]] = []
+        attempts: list[tuple[float, float | None, int]] = []
         for i in range(max_attempts):
-            wall, stl = _timed_attempt(fn)
-            attempts.append((wall, stl))
+            wall, stl, n = _timed_attempt(fn)
+            attempts.append((wall, stl, n))
             if stl is None or stl <= steal_accept:
                 break
             if i + 1 < max_attempts:
                 print(f"  {name}: attempt {i + 1} saw {stl:.2f} stolen "
                       "cores — retrying", file=sys.stderr)
-        wall, stl = min(attempts, key=lambda a: a[0])
+        wall, stl, compiles[name] = min(attempts, key=lambda a: a[0])
         timings[name] = round(wall, 3)
         if stl is not None:
             query_steal[name] = stl
         if len(attempts) > 1:
             query_attempts[name] = [
                 {"sec": round(w, 3), "steal_cores": s}
-                for w, s in attempts]
+                for w, s, _ in attempts]
         print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
@@ -253,6 +264,13 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # Janino compiles per query (accepted attempt) and over the
+        # whole warm pass (None when skipped). With the warm pass on, a
+        # large per-query count means the codegen cache evicted what
+        # the warm pass compiled, so the timing is not warm; a few come
+        # from plans that differ between sf0.001 and this scale.
+        "codegen_compiles": compiles,
+        "warm_codegen_compiles": warm_compiles,
         # solo-run contract (BENCH.md): nonzero foreign_spark_jvms
         # means another Spark session shared the box during this run —
         # read `value` against a clean-session band, not as a code

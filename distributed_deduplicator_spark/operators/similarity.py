@@ -1336,29 +1336,29 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     dedup pipeline acts on is the transitive closure — keep one doc per
     *cluster*, not per pair. Iterative min-label propagation: each
     round, every node adopts the smallest label among itself and its
-    neighbors; converges in O(diameter) rounds (near-dup clusters are
-    small and dense — a handful of rounds in practice; the alternating
-    star-contraction family from the MapReduce-connectivity literature
-    drops this to O(log n) if ever needed).
+    neighbors; converges in O(diameter) rounds.
 
     Driver-side loop, each round one shuffle. Each round's label table
     is cut loose with an EAGER localCheckpoint: persist alone caches
     data but leaves the logical plan nested — the old labels appear
-    twice per round (propagation join + change test), so the plan
+    twice per round (neighbour-min join + left join), so the plan
     doubles every round and ~14 rounds OOM the ANALYZER on a 15-row
     chain (measured). Checkpointing resets the plan to a scan of the
-    materialized partitions. Checkpoint storage is NOT governed by
-    DataFrame.unpersist (it lives in RDD blocks the cache manager
-    never sees), so each superseded round's backing RDDs are captured
-    and unpersisted explicitly the moment the next round materializes
-    — at most two rounds hold blocks at any time — and the final
-    round's handles go to the module release hook. The loop exits
-    only on convergence; if ``max_iter`` rounds pass while labels are
-    still moving it RAISES (a silently truncated closure would split
-    clusters — every oracle-checked consumer compares against a true
-    recursive closure), so pathological diameters demand an explicit
-    higher cap (or the two-phase algorithm) rather than getting wrong
-    clusters.
+    materialized partitions. The checkpoint carries each round's
+    ``_moved`` flag, so the convergence probe is a count over it: no
+    join against the old labels and no ``limit``, whose generated code
+    names its counter per plan and so never hits the codegen cache.
+    Checkpoint storage is NOT governed by DataFrame.unpersist (it lives
+    in RDD blocks the cache manager never sees), so each superseded
+    round's backing RDDs are captured and unpersisted explicitly the
+    moment the next round materializes — at most two rounds hold
+    blocks at any time — and the final round's handles go to the
+    module release hook. The loop exits only on convergence; if
+    ``max_iter`` rounds pass while labels are still moving it RAISES
+    (a silently truncated closure would split clusters — every
+    oracle-checked consumer compares against a true recursive closure),
+    so pathological diameters demand an explicit higher cap (or the
+    two-phase algorithm) rather than getting wrong clusters.
     """
     if algorithm == "two-phase":
         return _connected_components_two_phase(pairs, id_a, id_b, max_iter)
@@ -1404,11 +1404,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             labels.join(neighbor_min,
                         labels["id"] == neighbor_min["src"], "left")
                   .select(labels["id"],
-                          F.least("label", "nmin").alias("label")))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "id")
-                   .where(F.col("n.label") != F.col("o.label"))
-                   .limit(1).count())
+                          F.least("label", "nmin").alias("label"),
+                          F.coalesce(F.col("nmin") < F.col("label"),
+                                     F.lit(False)).alias("_moved")))
+        changed = new_labels.where("_moved").count()
         for h in cur_handles:       # free the superseded round NOW
             h.unpersist(False)
         labels, cur_handles = new_labels, new_handles
@@ -1472,10 +1471,11 @@ def _connected_components_two_phase(pairs: DataFrame, id_a: str, id_b: str,
                 .where(F.col("u") != F.col("v"))
         new_edges, new_handles = _checkpoint_tracked(
             hooked.unionByName(own).distinct())
-        # converged when the directed star set is stable (same size and
-        # nothing new — together: set equality)
-        stable = (new_edges.count() == edges.count()
-                  and new_edges.exceptAll(edges).limit(1).count() == 0)
+        # converged when no edge is in only one of the two rounds' sets
+        stable = (new_edges.withColumn("_n", F.lit(1))
+                  .join(edges.withColumn("_o", F.lit(1)), ["u", "v"], "full")
+                  .where(F.col("_n").isNull() | F.col("_o").isNull())
+                  .count() == 0)
         for h in cur_handles:
             h.unpersist(False)
         edges, cur_handles = new_edges, new_handles

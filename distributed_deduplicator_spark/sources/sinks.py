@@ -143,9 +143,11 @@ def merge_upsert(spark: SparkSession, target_table: str, source: DataFrame,
     """
     from pyspark.sql import functions as F
     key_list = list(keys)
-    dup = (source.groupBy(*key_list).count()
-                 .where(F.col("count") > 1).limit(1).count())
-    if dup:
+    # an aggregate, not a `limit` probe: a limit's generated code is
+    # new source per plan, so it would compile on every call
+    most = (source.groupBy(*key_list).count()
+                  .agg(F.max("count")).collect()[0][0])
+    if most is not None and most > 1:
         raise ValueError(
             f"merge_upsert: source has duplicate rows for keys "
             f"{key_list} — MERGE requires at most one source row per "

@@ -58,10 +58,10 @@ def upsert_merge_fn(keys: list[str], order_by: list[str], base_dir: str):
 
 def run_upsert_ledger(stream_df: DataFrame, keys: list[str],
                       order_by: list[str], base_dir: str,
-                      checkpoint_dir: str,
-                      max_files_per_trigger: int | None = None
-                      ) -> None:
-    """Drain a stream (availableNow) through the upsert ledger sink."""
+                      checkpoint_dir: str) -> None:
+    """Drain a stream (availableNow) through the upsert ledger sink.
+    Micro-batch size is the stream reader's own option (e.g.
+    ``maxFilesPerTrigger``)."""
     q = (stream_df.writeStream
          .foreachBatch(upsert_merge_fn(keys, order_by, base_dir))
          .option("checkpointLocation", checkpoint_dir)

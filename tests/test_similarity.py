@@ -333,6 +333,35 @@ def test_two_phase_cc_matches_label_propagation_on_neardup_graph(spark,
     assert jmap.size() == 0
 
 
+def test_repeated_neardup_and_cc_compile_no_new_classes(spark, docs):
+    """A repeat of minhash_near_dup + connected_components, under both
+    CC algorithms, reuses the classes the first pass generated: the
+    codegen cache holds that working set (more than Spark's default 100
+    classes), and no per-round convergence probe emits new source (a
+    ``limit`` names its counter per plan). AQE is off for the test: its
+    runtime join conversions race stage completion, so build sides and
+    codegen stage ids vary from run to run — a finite set of variants a
+    long session caches too, but one a single repeat cannot exhaust."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles(algorithm):
+        c0 = codegen.METRIC_COMPILATION_TIME().getCount()
+        pairs = S.minhash_near_dup(docs, "doc_id", "text", threshold=0.5)
+        S.connected_components(pairs, algorithm=algorithm).collect()
+        S.release_persisted()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - c0
+
+    algorithms = ("label-propagation", "two-phase")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        first = sum(compiles(a) for a in algorithms)
+        assert {a: compiles(a) for a in algorithms} == \
+            dict.fromkeys(algorithms, 0), f"first pass compiled {first}"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_containment_join_matches_python_reference(spark, docs):
     """containment_join reproduces a pure-Python shingle-set
     containment computation exactly (pairs AND values), and every
