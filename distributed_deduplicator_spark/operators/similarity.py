@@ -514,8 +514,8 @@ def _ivf_list_scorer(k: int):
 
 
 def _lsh_bucket_scorer(k: int):
-    """Build the grouped per-bucket scorer for :func:`ann_lsh_topk`'s
-    ``scorer='bucket_gemm'`` path: f(bucket_pdf(id, unit)) →
+    """Build the grouped per-bucket scorer for :func:`ann_lsh_topk`:
+    f(bucket_pdf(id, unit)) →
     (query_id, neighbor_id, cosine) — ONE float64 GEMM of the bucket's
     members against themselves, then the shared per-query top-(k+1)
     emit (:func:`_per_query_topx`, so tie-break / self-exclusion
@@ -639,7 +639,7 @@ def _lsh_auto_sizing(n: int, target_bucket: int = 128) -> tuple[int, int]:
 def _pq_list_scorer(rerank: int, m: int, ksub: int, cent=None):
     """Build the cogrouped per-list ADC scorer for
     :func:`ann_ivfpq_topk`: f(members_pdf(id, list_id, codes),
-    probes_pdf(query_id, list_id, qtab|qunit[, qc])) → (query_id,
+    probes_pdf(query_id, list_id, qunit[, qc])) → (query_id,
     neighbor_id, adc) — the list's per-query ADC top-(rerank+1).
 
     ADC(q, x) = [qc +] Σ_s qtab[s·ksub + code_s(x)], computed as ONE
@@ -651,31 +651,22 @@ def _pq_list_scorer(rerank: int, m: int, ksub: int, cent=None):
     by a different missing dot(q, c) per list. Codes are a
     sub_id-keyed MAP (sparse-codebook safe — see pq_encode).
 
-    The per-query ADC table arrives one of two ways:
-
-    - ``qunit`` (the engine default, round-11): the probe row carries
-      the query's float32 unit vector (dim·4 ≈ 256 B) and the qtab is
-      computed IN-TASK as m tiny (Q×dsub)@(dsub×ksub) GEMMs against
-      the (m, ksub, dsub) codebook array. The codebook arrives either
-      as the ``cent`` closure (unit tests / standalone use) or
-      IN-BAND: probe rows flagged ``_cb=True`` whose ``qunit`` field
-      is the flattened dense slot-scattered codebook
-      (m·ksub·dsub floats ≈ 4 KB) — one such row per list group,
-      unioned into the probes side by :func:`ann_ivfpq_topk` via a
-      broadcast crossJoin, so query CONSTRUCTION stays pure planning
-      (no driver collect, no eager job). Rationale for the payload
-      itself: the qtab (m·ksub·4 B ≈ 2 KB) was the probe fan-out
-      join's dominant wire payload (one replica per (query, probed
-      list) — n·nprobe rows), while recomputing it costs Q·dim·ksub
-      flops per list (~0.1% of the ADC GEMM itself). Shipping the 8×
-      smaller qunit and rebuilding the table next to the data is the
-      classic ship-function-not-data trade. Slots absent from a
-      sparse codebook hold 0.0 in the dense scatter — identical to
-      the dense-qtab contract (no member can carry such a code).
-    - ``qtab``: a precomputed DENSE slot-indexed array<float> (the
-      pre-round-11 wire format, kept for the legacy
-      ``probe_payload='qtab'`` A/B path and as the direct numerics
-      surface the unit tests drive with hand-built tables).
+    The probe row carries the query's float32 unit vector ``qunit``
+    (dim·4 ≈ 256 B) and the per-query ADC table qtab is computed
+    IN-TASK as m tiny (Q×dsub)@(dsub×ksub) GEMMs against the
+    (m, ksub, dsub) codebook array. The codebook arrives either as the
+    ``cent`` closure (unit tests / standalone use) or IN-BAND: probe
+    rows flagged ``_cb=True`` whose ``qunit`` field is the flattened
+    dense slot-scattered codebook (m·ksub·dsub floats ≈ 4 KB) — one
+    such row per list group, unioned into the probes side by
+    :func:`ann_ivfpq_topk` via a broadcast crossJoin, so query
+    CONSTRUCTION stays pure planning (no driver collect, no eager
+    job). Why not ship the table: at m·ksub·4 B ≈ 2 KB it would be the
+    probe fan-out join's dominant wire payload (one replica per
+    (query, probed list) — n·nprobe rows), while recomputing it costs
+    Q·dim·ksub flops per list (~0.1% of the ADC GEMM itself). Slots
+    absent from a sparse codebook hold 0.0 in the dense scatter (no
+    member can carry such a code).
 
     A subspace missing from a member's codes gathers a sentinel slot
     holding 0.0, exactly the declarative fold's coalesce-to-0.
@@ -713,26 +704,20 @@ def _pq_list_scorer(rerank: int, m: int, ksub: int, cent=None):
                          else dict(cell).items()):
                 codes[r, int(s)] = int(s) * ksub + int(c)
         qt = np.zeros((len(q_pdf), sent + 1), dtype=np.float64)
-        if "qtab" in q_pdf.columns:
-            # precomputed DENSE positional array — one vstack, no
-            # per-entry Python conversion
-            qt[:, :sent] = np.vstack([np.asarray(c, dtype=np.float64)
-                                      for c in q_pdf["qtab"]])
-        else:
-            # qunit mode: rebuild the table in-task. qmat is the
-            # float32 wire payload upcast once; per subspace s,
-            # qt[:, s·ksub:(s+1)·ksub] = q_s @ ctab_s^T — m tiny
-            # GEMMs, Q·dim·ksub flops total for the group.
-            if ctab is None:
-                raise ValueError(
-                    "qunit scoring needs a codebook: pass cent= or "
-                    "union in-band _cb rows (ann_ivfpq_topk does)")
-            qmat = np.vstack([np.asarray(c, dtype=np.float64)
-                              for c in q_pdf["qunit"]])
-            dsub = qmat.shape[1] // m
-            qsub = qmat.reshape(len(q_pdf), m, dsub)
-            for s in range(m):
-                qt[:, s * ksub:(s + 1) * ksub] = qsub[:, s, :] @ ctab[s].T
+        # rebuild the table in-task. qmat is the float32 wire payload
+        # upcast once; per subspace s,
+        # qt[:, s·ksub:(s+1)·ksub] = q_s @ ctab_s^T — m tiny GEMMs,
+        # Q·dim·ksub flops total for the group.
+        if ctab is None:
+            raise ValueError(
+                "ADC scoring needs a codebook: pass cent= or "
+                "union in-band _cb rows (ann_ivfpq_topk does)")
+        qmat = np.vstack([np.asarray(c, dtype=np.float64)
+                          for c in q_pdf["qunit"]])
+        dsub = qmat.shape[1] // m
+        qsub = qmat.reshape(len(q_pdf), m, dsub)
+        for s in range(m):
+            qt[:, s * ksub:(s + 1) * ksub] = qsub[:, s, :] @ ctab[s].T
         # ADC as ONE BLAS GEMM against a 0/1 code-indicator matrix:
         # adc[q, x] = Σ_s qt[q, slot(x, s)] = (qt @ onehot)[q, x] with
         # onehot[slot, x] = 1 iff member x's subspace-s code maps to
@@ -1760,75 +1745,12 @@ def pq_encode(unit: DataFrame, codebooks: DataFrame, m: int, ksub: int,
                     F.struct("sub_id", "code"))).alias("codes")))
 
 
-def pq_query_tables(unit: DataFrame, codebooks: DataFrame, m: int,
-                    ksub: int, dim: int) -> DataFrame:
-    """Per-query ADC lookup table: dot(query subvector, centroid) for
-    every (sub_id, code), as a DENSE positional array indexed by
-    ``slot = sub_id·ksub + code`` (length m·ksub; slots absent from a
-    sparse codebook hold 0.0 — no member can carry such a code, so
-    the value is never read). Returns (id, qtab array<float>).
-
-    Dense array, not the slot-keyed map it used to be: the qtab rides
-    the probe fan-out join (one replica per probed list), and Arrow
-    moves array<float> into the cogrouped scorer as a numpy block —
-    the map<int,double> encoding forced a per-entry Python dict
-    conversion inside every task, ~420M entries at sf1/nprobe=41
-    (n·nprobe·m·ksub), measured as the dominant IVF-PQ cost once the
-    ADC itself went through the one-hot GEMM. The slot scatter
-    (sparse-codebook alignment safety) happens in ONE Arrow
-    mapInPandas pass over the n QUERY rows — never per probe, and
-    never as a JVM transform(sequence, element_at) projection: that
-    higher-order-function spelling is CodegenFallback-interpreted and
-    its 512 linear map scans per row measured ~50 s at sf1 on their
-    own."""
-    import numpy as np
-    import pandas as pd
-
-    dsub = dim // m
-    size = m * ksub
-    sub = F.slice("unit", F.col("sub_id") * dsub + 1, dsub)
-    dot = F.aggregate(F.zip_with(sub, "ccent", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    slot = (F.col("sub_id") * ksub + F.col("code")) \
-        .cast("int").alias("slot")
-
-    def densify(it):
-        # one (slot, dot) struct list per query — a single aggregate,
-        # so slot/dot pairing never depends on cross-aggregate
-        # iteration order
-        for pdf in it:
-            out = np.zeros((len(pdf), size), dtype=np.float32)
-            for r, cell in enumerate(pdf["_sd"]):
-                for e in cell:
-                    out[r, int(e["slot"])] = float(e["dot"])
-            yield pd.DataFrame({"id": pdf["id"], "qtab": list(out)})
-
-    # float, not double: the qtab is the WIRE-dominant column (one
-    # replica per probed list — n·nprobe rows), and ADC is an
-    # approximate shortlist score whose exactness lives in the
-    # downstream re-rank on true dot products; float32's ~1e-7
-    # relative error is orders below the PQ quantization error it
-    # rides on, so halving the fan-out bytes is free (sf1 recall
-    # bit-identical at every measured knob). The id field keeps the
-    # input's type (ADVICE r10: hard-coding `id long` narrowed the
-    # previously type-preserving aggregation for string/int32 ids).
-    id_type = unit.schema["id"].dataType.simpleString()
-    return (unit.crossJoin(F.broadcast(codebooks))
-                .select("id", slot, dot.alias("dot"))
-                .groupBy("id")
-                .agg(F.collect_list(F.struct("slot", "dot"))
-                      .alias("_sd"))
-                .mapInPandas(densify,
-                             f"id {id_type}, qtab array<float>"))
-
-
 def ann_ivfpq_topk(emb: DataFrame, k: int = 10, nlist: int | None = None,
                    nprobe: int | None = None, m: int = 32, ksub: int = 16,
                    rerank: int | None = None, id_col: str = "vec_id",
                    vec_col: str = "embedding", dim: int = 64,
                    n: int | None = None, residual: bool = False,
-                   cb_refine: bool = True,
-                   probe_payload: str = "qunit") -> DataFrame:
+                   cb_refine: bool = True) -> DataFrame:
     """IVF-PQ two-stage retrieval — the memory-bound 100 TB ANN shape:
     IVF lists prune candidates (~nprobe/nlist of the corpus per query),
     asymmetric-distance PQ scores them from ``m`` byte codes instead of
@@ -1851,7 +1773,7 @@ def ann_ivfpq_topk(emb: DataFrame, k: int = 10, nlist: int | None = None,
     through n ≈ 420k, and past that the cap holds nprobe near
     128·nlist/√n ≈ 128 (n=1M/nlist=1000 → 128 probes), bounding both
     the per-list ADC work and the number of probe-payload replicas
-    (dim·4 ≈ 256 B qunit rows at the default wire) each query ships;
+    (dim·4 ≈ 256 B qunit rows) each query ships;
     pass ``nprobe`` explicitly to trade wire volume for recall. ``m=32`` (2-dim subspaces): each m
     doubling halves the per-subspace quantization error that ate the
     IVF candidate recall the lists had paid for (drive recall@5 at
@@ -1873,8 +1795,6 @@ def ann_ivfpq_topk(emb: DataFrame, k: int = 10, nlist: int | None = None,
     subspaces, and these fixtures are isotropic by construction — the
     rotation has nothing to decorrelate (the same reasoning the
     residual path's measured inversion confirmed empirically).
-    (The "costs that double" with m include the per-query table —
-    m·ksub float32 slots ≈ 2 KB at the m=32 default.)
 
     ``rerank=None`` → 16·k: on low-contrast corpora the ADC shortlist
     is the recall bottleneck, and deepening the EXACT re-rank pass is
@@ -1903,14 +1823,10 @@ def ann_ivfpq_topk(emb: DataFrame, k: int = 10, nlist: int | None = None,
     sampled PQ codebooks (see :func:`pq_codebooks`), worth +0.04-0.06
     recall at identical query cost.
 
-    ``probe_payload`` selects what each (query, probed list) row
-    carries into the cogrouped scorer: ``'qunit'`` (default) ships
-    the dim·4-byte float32 unit vector and rebuilds the ADC table
-    in-task from an in-band broadcast codebook row (see
-    :func:`_pq_list_scorer` — the round-11 8× cut on the probe
-    join's dominant wire payload); ``'qtab'`` is the legacy
-    precomputed-table wire, kept for A/B measurement (BENCH.md
-    round-11 table).
+    Each (query, probed list) row carries the query's dim·4-byte
+    float32 unit vector into the cogrouped scorer, which rebuilds the
+    ADC table in-task from an in-band broadcast codebook row (see
+    :func:`_pq_list_scorer`).
     """
     if nlist is None or nprobe is None:
         # only auto-sizing needs the corpus cardinality — a call with
@@ -1925,15 +1841,11 @@ def ann_ivfpq_topk(emb: DataFrame, k: int = 10, nlist: int | None = None,
         # _candidate_budget(n) = max(2048, 128√n): the cap bounds both
         # the per-list ADC gather work and — the binding wire cost —
         # the number of probe-payload replicas (dim·4 ≈ 256 B qunit
-        # rows at the default wire) each query ships (one per probed
-        # list); under the √n curve that wire cost is nprobe ≈
-        # 128·nlist/√n ≈ 128 replicas/query at ANY capped scale (vs
-        # the flat-2048 cap's 2, which bought its cheapness with
-        # recall decaying as 2048/n — see _candidate_budget). The
-        # earlier declarative
-        # ADC join additionally materialized a qtab per CANDIDATE row
-        # and failed the 10× sweep step outright once m=16 pushed the
-        # codes table past the auto-broadcast threshold.
+        # rows) each query ships (one per probed list); under the √n
+        # curve that wire cost is nprobe ≈ 128·nlist/√n ≈ 128
+        # replicas/query at ANY capped scale (vs the flat-2048 cap's
+        # 2, which bought its cheapness with recall decaying as
+        # 2048/n — see _candidate_budget).
         nprobe = _budget_capped_nprobe(nlist, sized_n)
     rerank = rerank if rerank is not None else 16 * k
     u = _tracked_persist(unit_vectors(emb, id_col, vec_col))
@@ -1981,10 +1893,7 @@ def ann_ivfpq_topk(emb: DataFrame, k: int = 10, nlist: int | None = None,
     # members carry their m-byte codes once per list, probing queries
     # carry their ADC payload once per probed list, and the
     # (queries × members) ADC matrix is a numpy table-gather inside
-    # the task — candidate rows NEVER materialize (the declarative
-    # alternative joined a 2 KB qtab onto every candidate row:
-    # ~390 GB through one exchange at n=100k unless the planner
-    # happened to broadcast the codes side). Per-list top-(rerank+1)
+    # the task — candidate rows NEVER materialize. Per-list top-(rerank+1)
     # under (adc desc, neighbor_id asc) is a superset of the global
     # ADC top-rerank restricted to that list — same exactness argument
     # as _ivf_list_scorer — so the skinny global window below recovers
@@ -1997,71 +1906,57 @@ def ann_ivfpq_topk(emb: DataFrame, k: int = 10, nlist: int | None = None,
                   F.col("centroid_id").alias("list_id")]
     if residual:
         probe_cols.append(F.col("cdot").alias("qc"))
-    if probe_payload == "qunit":
-        # round-11 wire cut (VERDICT r10 #2): the probe row ships the
-        # query's float32 unit vector (dim·4 ≈ 256 B) instead of the
-        # m·ksub·4 ≈ 2 KB qtab, and the scorer rebuilds each query's
-        # table in-task from the codebook. The codebook travels
-        # IN-BAND: one flattened dense row per list (slot-scattered
-        # to m·ksub·dsub floats so a sparse codebook can never shift
-        # positions) is unioned into the probes side via a broadcast
-        # crossJoin onto the nlist centroid ids — nlist × ~4 KB
-        # total, and the whole construction stays pure planning (a
-        # driver-side cb.collect() here would run the codebook
-        # pipeline as an EAGER job at query-construction time,
-        # breaking the registry's no-jobs laziness contract —
-        # tests/test_plan_shapes.py — and bottlenecking plan build on
-        # a driver round-trip). The rebuilt qtab entries are float64
-        # dots of float32-rounded inputs — the same ~1e-7 rounding
-        # the old float32 qtab wire already carried, orders below the
-        # PQ quantization error either way.
-        dsub = dim // m
-        cb_map = cb.agg(F.map_from_entries(F.collect_list(F.struct(
-            (F.col("sub_id") * ksub + F.col("code")).cast("int")
-            .alias("slot"), F.col("ccent")))).alias("_m"))
-        cb_flat = cb_map.select(F.flatten(F.transform(
-            F.sequence(F.lit(0), F.lit(m * ksub - 1)),
-            lambda s: F.coalesce(
-                F.element_at(F.col("_m"), s),
-                F.array_repeat(F.lit(0.0), dsub)))).alias("qunit"))
-        cb_flat = cb_flat.select(F.transform(
-            "qunit", lambda x: x.cast("float")).alias("qunit"))
-        # dummy-key equi-join, not crossJoin: same one-row broadcast,
-        # but it plans as BroadcastHashJoin (the registry's plan gate
-        # bans nested-loop shapes outside the documented brute-force
-        # paths)
-        cb_rows = (cents.select(F.col("centroid_id").alias("list_id"),
-                                F.lit(1).alias("_j"))
-                        .join(F.broadcast(cb_flat.withColumn(
-                            "_j", F.lit(1))), "_j")
-                        .select(F.lit(-1).cast("long").alias("query_id"),
-                                "list_id", "qunit",
-                                *([F.lit(0.0).alias("qc")]
-                                  if residual else []),
-                                F.lit(True).alias("_cb")))
-        probes = (assigns.select(*probe_cols)
-                         .join(u.select(F.col("id").alias("query_id"),
-                                        F.transform(
-                                            "unit",
-                                            lambda x: x.cast("float"))
-                                         .alias("qunit")),
-                               "query_id")
-                         .withColumn("_cb", F.lit(False))
-                         .unionByName(cb_rows))
-        scorer = _pq_list_scorer(rerank, m, ksub)
-    else:
-        # legacy qtab wire (the pre-round-11 shape, kept for A/B
-        # measurement): one dense table per query, precomputed as a
-        # distributed pass and replicated per probed list by the join
-        qtabs = pq_query_tables(u, cb, m, ksub, dim)
-        probes = (assigns.select(*probe_cols)
-                         .join(qtabs.withColumnRenamed("id", "query_id"),
-                               "query_id"))
-        scorer = _pq_list_scorer(rerank, m, ksub)
+    # The probe row ships the query's float32 unit vector
+    # (dim·4 ≈ 256 B), and the scorer rebuilds each query's ADC table
+    # in-task from the codebook. The codebook travels IN-BAND: one
+    # flattened dense row per list (slot-scattered to m·ksub·dsub
+    # floats so a sparse codebook can never shift positions) is
+    # unioned into the probes side via a broadcast crossJoin onto the
+    # nlist centroid ids — nlist × ~4 KB total, and the whole
+    # construction stays pure planning (a driver-side cb.collect()
+    # here would run the codebook pipeline as an EAGER job at
+    # query-construction time, breaking the registry's no-jobs
+    # laziness contract — tests/test_plan_shapes.py — and
+    # bottlenecking plan build on a driver round-trip). The rebuilt
+    # table entries are float64 dots of float32-rounded inputs — ~1e-7
+    # rounding, orders below the PQ quantization error.
+    dsub = dim // m
+    cb_map = cb.agg(F.map_from_entries(F.collect_list(F.struct(
+        (F.col("sub_id") * ksub + F.col("code")).cast("int")
+        .alias("slot"), F.col("ccent")))).alias("_m"))
+    cb_flat = cb_map.select(F.flatten(F.transform(
+        F.sequence(F.lit(0), F.lit(m * ksub - 1)),
+        lambda s: F.coalesce(
+            F.element_at(F.col("_m"), s),
+            F.array_repeat(F.lit(0.0), dsub)))).alias("qunit"))
+    cb_flat = cb_flat.select(F.transform(
+        "qunit", lambda x: x.cast("float")).alias("qunit"))
+    # dummy-key equi-join, not crossJoin: same one-row broadcast,
+    # but it plans as BroadcastHashJoin (the registry's plan gate
+    # bans nested-loop shapes outside the documented brute-force
+    # paths)
+    cb_rows = (cents.select(F.col("centroid_id").alias("list_id"),
+                            F.lit(1).alias("_j"))
+                    .join(F.broadcast(cb_flat.withColumn(
+                        "_j", F.lit(1))), "_j")
+                    .select(F.lit(-1).cast("long").alias("query_id"),
+                            "list_id", "qunit",
+                            *([F.lit(0.0).alias("qc")]
+                              if residual else []),
+                            F.lit(True).alias("_cb")))
+    probes = (assigns.select(*probe_cols)
+                     .join(u.select(F.col("id").alias("query_id"),
+                                    F.transform(
+                                        "unit",
+                                        lambda x: x.cast("float"))
+                                     .alias("qunit")),
+                           "query_id")
+                     .withColumn("_cb", F.lit(False))
+                     .unionByName(cb_rows))
     scored = (members.groupBy("list_id")
                      .cogroup(probes.groupBy("list_id"))
                      .applyInPandas(
-                         scorer,
+                         _pq_list_scorer(rerank, m, ksub),
                          "query_id long, neighbor_id long, adc double"))
     w_adc = Window.partitionBy("query_id").orderBy(F.col("adc").desc(),
                                                    F.col("neighbor_id"))
@@ -2453,27 +2348,16 @@ def ann_lsh_topk(emb: DataFrame, k: int = 10,
                  num_tables: int | None = None,
                  num_planes: int | None = None, id_col: str = "vec_id",
                  vec_col: str = "embedding", dim: int = 64,
-                 target_bucket: int = 128, n: int | None = None,
-                 unit_wire: str = "float64",
-                 scorer: str = "bucket_gemm") -> DataFrame:
+                 target_bucket: int = 128, n: int | None = None) -> DataFrame:
     """Approximate all-pairs top-k: cosine top-k over LSH-collided pairs.
 
     The scale path vs brute force: scoring is per-(table, bucket) —
     shuffle on (table, bucket), work Σ|bucket|² per table instead of
-    n². ``scorer='bucket_gemm'`` (default since round 12, VERDICT r11
-    #1) runs each bucket group through ONE members×members float64
+    n². Each bucket group runs through ONE members×members float64
     BLAS GEMM in a grouped Arrow stage and emits only the per-query
     top-(k+1) — exact, see :func:`_lsh_bucket_scorer` — so the
     cross-table dedup and the global window see n·tables·(k+1) pruned
-    rows instead of every collided pair. ``scorer='pair_fold'`` keeps
-    the round-7..11 shape (bare id-pair candidate join → DISTINCT →
-    re-attach both unit arrays → 64-term JVM fold per pair → explode
-    both directions → window); at sf1 (n=20k, 27 tables) that path
-    DISTINCTs ~42M directed id pairs and folds ~36M dots — measured
-    47.7 s median vs 10.1 s for bucket_gemm (interleaved A/B, BENCH.md
-    round 12), output rank-identical at every fixture scale and
-    cosine bit-identical at the gate SFs (1 ulp at sf1: BLAS blocking
-    vs the fold's sequential sum).
+    rows instead of every collided pair.
 
     ``num_planes=None`` adapts to corpus size: planes =
     round(log2(n / target_bucket)) — round, NOT ceil: ceil biased the
@@ -2521,95 +2405,28 @@ def ann_lsh_topk(emb: DataFrame, k: int = 10,
         if num_tables is None:
             num_tables = auto_tables
     u = unit_vectors(emb, id_col, vec_col)
-    if scorer == "bucket_gemm":
-        # Round-12 default (VERDICT r11 #1): score each (table, bucket)
-        # group with ONE members×members float64 GEMM and emit only the
-        # per-query top-(k+1) — the cogrouped-numpy shape that already
-        # pays in _ivf_list_scorer/_pq_list_scorer. vs the pair_fold
-        # path below at sf1 (n=20k, 27 tables × 7 planes): that path
-        # materializes ~42M directed candidate id pairs, DISTINCTs
-        # them (~670 MB exchange), re-attaches both 512 B unit arrays
-        # per surviving pair, folds a 64-term dot per row, then
-        # windows over ~2× that after the direction explode. Here each
-        # unit crosses the wire once per TABLE (n·L rows ≈ 280 MB at
-        # sf1), the Σ|bucket|² dot products run as BLAS GEMMs, and the
-        # dedup + global window see only n·L·(k+1) pruned rows (~6M at
-        # sf1 vs ~72M). Per-bucket top-(k+1) is exact — see
-        # _lsh_bucket_scorer. The same pair scored in two buckets can
-        # differ in the last ulp (BLAS blocking depends on matrix
-        # shape), so the dedup takes max(cosine) — deterministic, and
-        # the value a score-all-pairs GEMM would keep.
-        bu = rp_lsh_buckets(emb, num_tables, num_planes, id_col, vec_col,
-                            dim, unit=u, keep_unit=True)
-        per = (bu.groupBy("table", "bucket")
-                 .applyInPandas(
-                     _lsh_bucket_scorer(k),
-                     "query_id long, neighbor_id long, cosine double"))
-        pairs = (per.groupBy("query_id", "neighbor_id")
-                    .agg(F.max("cosine").alias("cosine")))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id"))
-        return (pairs.withColumn("rk", F.row_number().over(w))
-                     .where(F.col("rk") <= k)
-                     .select("query_id", "neighbor_id",
-                             F.col("rk").alias("rank"), "cosine"))
-    b = rp_lsh_buckets(emb, num_tables, num_planes, id_col, vec_col, dim,
-                       unit=u)
-    a, c = b.alias("a"), b.alias("b")
-    # UNORDERED candidates (id_a < id_b): collisions are symmetric, so
-    # deduping half the directed volume and scoring each pair ONCE
-    # halves the distinct shuffle and the dot-product work; both
-    # directions re-emerge as a cheap 2-row explode after scoring
-    # (the top-k window needs the pair under both query ids)
-    cand = (a.join(c, (F.col("a.table") == F.col("b.table"))
-                     & (F.col("a.bucket") == F.col("b.bucket"))
-                     & (F.col("a.id") < F.col("b.id")))
-             .select(F.col("a.id").alias("id_a"),
-                     F.col("b.id").alias("id_b"))
-             .distinct())
-    # unit_wire='float64' (default) — the round-11 float32 experiment
-    # is a MEASURED NEGATIVE here (BENCH.md round-11 A/B): recall is
-    # bit-identical (0.7273 at sf1, the fold upcasts per element so
-    # only inputs carry float32's ~6e-8 rounding), but wall GREW
-    # ~1.16× (49.1 s vs 42.2 s mean, interleaved same-session pairs).
-    # Unlike IVF-PQ's probe join — a real exchange, where the same
-    # trick paid 1.3× — this scoring join is two BROADCAST hash
-    # joins: the unit arrays are local memcpy from the broadcast
-    # table, never network, so halving bytes saves almost nothing
-    # while the 2×dim per-element casts inside the fold add real CPU
-    # on all ~41M pair rows. On a cluster where this join turned
-    # sort-merge (corpus too big to broadcast), the trade could
-    # invert — hence a knob, not a removal.
-    if unit_wire == "float32":
-        uw = u.select("id", F.transform(
-            "unit", lambda x: x.cast("float")).alias("unit"))
-        dot = F.aggregate(
-            F.zip_with("qu", "nu",
-                       lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0), lambda acc, v: acc + v)
-    else:
-        uw = u
-        dot = _dot_indexed("qu", "nu", dim)
-    scored = (cand
-              .join(uw.select(F.col("id").alias("id_a"),
-                              F.col("unit").alias("qu")), "id_a")
-              .join(uw.select(F.col("id").alias("id_b"),
-                              F.col("unit").alias("nu")), "id_b")
-              .select("id_a", "id_b", dot.alias("cosine")))
-    pairs = (scored.select(F.explode(F.array(
-                 F.struct(F.col("id_a").alias("query_id"),
-                          F.col("id_b").alias("neighbor_id"),
-                          F.col("cosine")),
-                 F.struct(F.col("id_b").alias("query_id"),
-                          F.col("id_a").alias("neighbor_id"),
-                          F.col("cosine")))).alias("p"))
-                   .select("p.query_id", "p.neighbor_id", "p.cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                               F.col("neighbor_id"))
+    # Each unit crosses the wire once per TABLE (n·L rows ≈ 280 MB at
+    # sf1), the Σ|bucket|² dot products run as BLAS GEMMs, and the
+    # dedup + global window see only n·L·(k+1) pruned rows.
+    # Per-bucket top-(k+1) is exact — see _lsh_bucket_scorer. The same
+    # pair scored in two buckets can differ in the last ulp (BLAS
+    # blocking depends on matrix shape), so the dedup takes
+    # max(cosine) — deterministic, and the value a score-all-pairs
+    # GEMM would keep.
+    bu = rp_lsh_buckets(emb, num_tables, num_planes, id_col, vec_col,
+                        dim, unit=u, keep_unit=True)
+    per = (bu.groupBy("table", "bucket")
+             .applyInPandas(
+                 _lsh_bucket_scorer(k),
+                 "query_id long, neighbor_id long, cosine double"))
+    pairs = (per.groupBy("query_id", "neighbor_id")
+                .agg(F.max("cosine").alias("cosine")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id"))
     return (pairs.withColumn("rk", F.row_number().over(w))
                  .where(F.col("rk") <= k)
-                 .select("query_id", "neighbor_id", F.col("rk").alias("rank"),
-                         "cosine"))
+                 .select("query_id", "neighbor_id",
+                         F.col("rk").alias("rank"), "cosine"))
 
 
 def containment_join(df: DataFrame, id_col: str, text_col: str,

@@ -62,21 +62,17 @@ from distributed_deduplicator_spark.queries import relational  # noqa: F401,E402
 # (2 + 35 + 13):
 # - the TWO ANN queries whose code changed in round 11 (changed-code
 #   rule): ann_ivfpq_topk's probe join ships the dim·4-byte float32
-#   query unit vector instead of the ~2 KB precomputed qtab (the ADC
-#   table is rebuilt in-task from an in-band broadcast codebook row —
+#   query unit vector instead of the ~2 KB precomputed ADC table
+#   (rebuilt in-task from an in-band broadcast codebook row —
 #   VERDICT r10 #2; executed plan changed, A/B recall-identical and
-#   1.3× faster at sf1). ann_lsh_topk gained a unit_wire knob whose
-#   float32 setting measured recall-identical but SLOWER (broadcast
-#   join — memcpy not network; BENCH.md round-11 negative), so its
-#   default — and executed plan — stays the float64 wire; pinned
-#   anyway since the function body changed.
+#   1.3× faster at sf1). ann_lsh_topk's function body changed with
+#   its executed plan unchanged; pinned anyway.
 #   Round 11's other code changes touch no registered query's
 #   executed path: cosine_topk_bruteforce's corpus_min_partitions
 #   derived-plan branch clamps to the session shuffle width (ADVICE
-#   r10 — non-default branch, no registered caller), pq_query_tables
-#   keeps its input id type (ADVICE r10 — now only on the legacy
-#   probe_payload='qtab' A/B path), and bench.py gained the bounded
-#   calm-wait + stricter foreign-JVM match (tooling).
+#   r10 — non-default branch, no registered caller), and bench.py
+#   gained the bounded calm-wait + stricter foreign-JVM match
+#   (tooling).
 # - the 35 queries whose newest driver row is round 7 — the entire
 #   r7-banked queue from VERIFIED.md (after this round no query's
 #   newest evidence predates r8).

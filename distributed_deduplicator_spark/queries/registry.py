@@ -20,9 +20,16 @@ def query(name: str, oracle: str | None = None):
     the action runs). The driver harness builds and executes queries
     strictly sequentially, so the previous query's blocks are dead by
     then; without this hook a full correctness run accumulates every
-    query's cache for the life of the session. If a caller interleaves
-    two registered queries, the released subtree silently recomputes —
-    a performance effect only, never a correctness one.
+    query's cache for the life of the session.
+
+    Interleaving is NOT safe: a build frees blocks that an earlier,
+    not-yet-executed DataFrame still reads. A persisted subtree
+    silently recomputes, but an operator's localCheckpoint (the
+    iterative queries' connected_components result) has no lineage to
+    recompute from — build ``near_dup_clusters``, then
+    ``dedup_first_wins``, then run the first, and the action fails on
+    the missing checkpoint block. Execute each query before building
+    the next.
     """
     def deco(fn):
         @functools.wraps(fn)

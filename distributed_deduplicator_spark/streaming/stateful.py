@@ -153,93 +153,3 @@ def ttl_dedup_stateful(events: DataFrame, ttl_seconds: int,
                 outputMode="append",
                 timeoutConf=timeout))
 
-
-def tws_available() -> bool:
-    """True iff transformWithStateInPandas can actually run here: its
-    Python<->JVM state protocol is protobuf-framed
-    (pyspark/sql/streaming/proto/StateMessage_pb2), so the API exists
-    but CRASHES the driver worker when the google.protobuf package is
-    absent — which it is in this container. Gate, don't stub: where
-    protobuf is installed the operator below runs unmodified."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def ttl_dedup_tws(events: DataFrame, ttl_seconds: int,
-                  evict_state: bool = True) -> DataFrame:
-    """Streaming exact TTL dedup on (user_id, event_type) via Spark 4's
-    transformWithStateInPandas — the modern arbitrary-state API
-    (SPARK-45939's successor to applyInPandasWithState), semantics
-    IDENTICAL to :func:`ttl_dedup_stateful`; equality of the two
-    drained outputs is locked by
-    tests/test_streaming_sinks.py::test_tws_equals_apply_in_pandas
-    (skipped where protobuf is absent — see :func:`tws_available`;
-    the processor itself is import-validated everywhere).
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) — transformWithState does
-    not run on the default HDFS-backed store.
-
-    What the new API buys at scale: named state variables (ValueState
-    here; Map/ListState for richer operators) instead of one untyped
-    tuple, first-class timers instead of a single timeout slot (the
-    eviction timer below can coexist with, say, an emit-summary
-    timer), initial-state bootstrap, and state-schema evolution —
-    the right substrate for the reference's richer provider states
-    (DeduplicationProvider.kt:190,206) if they ever stream.
-
-    ``evict_state`` keeps the same contract as the old API: True
-    registers a processing-time timer one TTL out (state bounded by
-    live keys — the Cassandra row-expiry analog); False runs in
-    timeMode='none' for availableNow drains (a pending timer keeps
-    the drain scheduling batches until it fires).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo, StatefulProcessor, StatefulProcessorHandle,
-        TimerValues)
-
-    ttl_us = ttl_seconds * 1_000_000
-
-    class TtlDedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._last = handle.getValueState(
-                "last_accepted", "last_accepted_us BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values: TimerValues):
-            got = self._last.get()
-            last_us = got[0] if got is not None else None
-            out, last_us = _ttl_process_group(list(rows), last_us,
-                                              ttl_us)
-            yield out
-            if last_us is not None:
-                self._last.update((last_us,))
-                if evict_state:
-                    # timers are multi-slot: delete the previous
-                    # eviction timer before arming the fresh one
-                    for t_ms in self._handle.listTimers():
-                        self._handle.deleteTimer(t_ms)
-                    self._handle.registerTimer(
-                        timer_values.getCurrentProcessingTimeInMs()
-                        + ttl_seconds * 1000)
-
-        def handleExpiredTimer(self, key, timer_values: TimerValues,
-                               expired_timer_info: ExpiredTimerInfo):
-            # a full TTL with no attempt → the key is re-claimable
-            # anyway; drop its state row (Cassandra row expiry)
-            self._last.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return (events.groupBy("user_id", "event_type")
-            .transformWithStateInPandas(
-                TtlDedup(),
-                outputStructType=OUT_SCHEMA,
-                outputMode="append",
-                timeMode="processingTime" if evict_state else "none"))

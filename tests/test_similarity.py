@@ -532,22 +532,36 @@ def test_lsh_bucket_scorer_matches_numpy_bruteforce():
         assert list(sub["neighbor_id"])[:k] == [i for _, i in want]
 
 
-def test_ann_lsh_scorer_paths_agree(spark, emb):
-    """The round-12 bucket_gemm default computes the same query as the
-    legacy pair_fold path: identical (query, neighbor, rank) triples
-    and cosines equal to float64 resolution on the fixture corpus (the
-    per-bucket top-(k+1) prune is exact — _lsh_bucket_scorer's
-    docstring carries the argument; this is the executable parity gate
-    VERDICT r11 #1 asked for)."""
-    k = 5
-    kw = dict(k=k, num_tables=8, num_planes=4)
-    new = {(r.query_id, r.neighbor_id): (r.rank, r.cosine)
-           for r in S.ann_lsh_topk(emb, **kw).collect()}
-    old = {(r.query_id, r.neighbor_id): (r.rank, r.cosine)
-           for r in S.ann_lsh_topk(emb, scorer="pair_fold", **kw).collect()}
-    assert set(new) == set(old)
-    assert all(new[p][0] == old[p][0] for p in new)
-    assert all(abs(new[p][1] - old[p][1]) < 1e-12 for p in new)
+def test_ann_lsh_topk_matches_numpy_collision_topk(spark, emb):
+    """ann_lsh_topk == each query's exact top-k over the ids it
+    collides with in any table: identical (query, neighbor, rank)
+    triples and cosines equal to float64 resolution on the fixture
+    corpus. The reference takes the buckets from rp_lsh_buckets and
+    scores in NumPy, so it shares nothing with the per-bucket GEMM
+    and top-(k+1) prune (whose exactness argument is in
+    _lsh_bucket_scorer's docstring)."""
+    import numpy as np
+
+    k, tables, planes = 5, 8, 4
+    got = {(r.query_id, r.neighbor_id): (r.rank, r.cosine)
+           for r in S.ann_lsh_topk(emb, k=k, num_tables=tables,
+                                   num_planes=planes).collect()}
+    units = {r.id: np.array(r.unit) for r in S.unit_vectors(emb).collect()}
+    groups: dict = {}
+    for r in S.rp_lsh_buckets(emb, tables, planes).collect():
+        groups.setdefault((r.table, r.bucket), set()).add(r.id)
+    cands: dict = {}
+    for members in groups.values():
+        for q in members:
+            cands.setdefault(q, set()).update(members - {q})
+    want = {}
+    for q, ids in cands.items():
+        ranked = sorted((-float(units[q] @ units[i]), i) for i in ids)[:k]
+        for rank, (neg, i) in enumerate(ranked, 1):
+            want[(q, i)] = (rank, -neg)
+    assert want and set(got) == set(want)
+    assert all(got[p][0] == want[p][0] for p in want)
+    assert all(abs(got[p][1] - want[p][1]) < 1e-12 for p in want)
 
 
 def test_pq_list_scorer_gather_sentinel_and_tiebreak():
@@ -561,9 +575,10 @@ def test_pq_list_scorer_gather_sentinel_and_tiebreak():
     import pandas as pd
 
     m, ksub = 2, 4
-    # qtab slots: sub 0 → 0..3, sub 1 → 4..7 — DENSE positional array
-    # (pq_query_tables contract)
+    # ADC table slots: sub 0 → 0..3, sub 1 → 4..7. With dsub = 1 and a
+    # query of ones, the scorer's rebuilt table IS the codebook
     qtab = np.array([1.0, 2.0, 3.0, 4.0, 10.0, 20.0, 30.0, 40.0])
+    cent = qtab.reshape(m, ksub, 1)
     members = pd.DataFrame({
         "list_id": [9] * 4,
         "id": [3, 1, 2, 7],
@@ -575,22 +590,22 @@ def test_pq_list_scorer_gather_sentinel_and_tiebreak():
         ],
     })
     probes = pd.DataFrame({"list_id": [9], "query_id": [7],
-                           "qtab": [qtab]})
+                           "qunit": [np.ones(m)]})
     # rerank=2 → top-3 window [44(self), 22, 22]: self dropped, the
     # 22-tie breaks id-ascending
-    out = (S._pq_list_scorer(2, m, ksub)(members, probes)
+    out = (S._pq_list_scorer(2, m, ksub, cent=cent)(members, probes)
            .sort_values(["adc", "neighbor_id"],
                         ascending=[False, True]).reset_index(drop=True))
     assert list(out["neighbor_id"]) == [1, 2]
     assert np.allclose(out["adc"], [22.0, 22.0])
     # rerank=3 → the sentinel member enters the window and its adc is
     # EXACTLY the present-subspace sum (absent sub contributes 0.0)
-    out3 = (S._pq_list_scorer(3, m, ksub)(members, probes)
+    out3 = (S._pq_list_scorer(3, m, ksub, cent=cent)(members, probes)
             .sort_values(["adc", "neighbor_id"],
                          ascending=[False, True]).reset_index(drop=True))
     assert list(out3["neighbor_id"]) == [1, 2, 3]
     assert np.allclose(out3["adc"], [22.0, 22.0, 1.0])
-    score = S._pq_list_scorer(2, m, ksub)
+    score = S._pq_list_scorer(2, m, ksub, cent=cent)
     empty = score(members.iloc[:0], probes)
     assert list(empty.columns) == ["query_id", "neighbor_id", "adc"]
     assert len(empty) == 0 and len(score(members, probes.iloc[:0])) == 0
@@ -609,18 +624,18 @@ def test_pq_list_scorer_matches_python_adc_bruteforce():
     codes = [{s: int(rng.integers(ksub)) for s in range(m)
               if rng.random() < 0.8}
              for _ in range(nm)]
-    qtabs = [{s * ksub + c: float(rng.normal())
+    # dsub = 1: query q's table entry for (s, c) is qunit[q, s] ·
+    # cent[s, c, 0]; the dicts drive the python reference below
+    qunit = rng.normal(size=(nq, m))
+    cent = rng.normal(size=(m, ksub, 1))
+    qtabs = [{s * ksub + c: float(qunit[q, s] * cent[s, c, 0])
               for s in range(m) for c in range(ksub)}
-             for _ in range(nq)]
-    # dicts drive the python reference below; the scorer itself takes
-    # the dense positional encoding (pq_query_tables contract)
-    qarrs = [np.array([qd[i] for i in range(m * ksub)])
-             for qd in qtabs]
+             for q in range(nq)]
     members = pd.DataFrame({"list_id": [1] * nm, "id": np.arange(nm),
                             "codes": codes})
     probes = pd.DataFrame({"list_id": [1] * nq,
-                           "query_id": np.arange(nq), "qtab": qarrs})
-    got = S._pq_list_scorer(rerank, m, ksub)(members, probes)
+                           "query_id": np.arange(nq), "qunit": list(qunit)})
+    got = S._pq_list_scorer(rerank, m, ksub, cent=cent)(members, probes)
     for qi in range(nq):
         adc = [sum(qtabs[qi][s * ksub + c] for s, c in codes[i].items())
                for i in range(nm)]
@@ -693,28 +708,28 @@ def test_pq_list_scorer_qc_offset():
     import pandas as pd
 
     m, ksub = 2, 4
-    # DENSE slot-indexed qtab (pq_query_tables contract): slots
-    # {0,1,4,5} populated, the rest 0.0
+    # ADC table slots {0,1,4,5} populated, the rest 0.0; dsub = 1 and a
+    # query of ones make the rebuilt table the codebook itself
     qtab = np.array([1.0, 2.0, 0.0, 0.0, 10.0, 20.0, 0.0, 0.0])
+    score = S._pq_list_scorer(2, m, ksub, cent=qtab.reshape(m, ksub, 1))
     members = pd.DataFrame({
         "list_id": [9] * 2,
         "id": [1, 2],
         "codes": [{0: 0, 1: 0}, {0: 1, 1: 1}],  # adc 11, 22
     })
     base = pd.DataFrame({"list_id": [9], "query_id": [7],
-                         "qtab": [qtab]})
-    plain = (S._pq_list_scorer(2, m, ksub)(members, base)
+                         "qunit": [np.ones(m)]})
+    plain = (score(members, base)
              .sort_values("neighbor_id").reset_index(drop=True))
     assert np.allclose(plain["adc"], [11.0, 22.0])
-    withqc = (S._pq_list_scorer(2, m, ksub)(
-                  members, base.assign(qc=[0.5]))
+    withqc = (score(members, base.assign(qc=[0.5]))
               .sort_values("neighbor_id").reset_index(drop=True))
     assert np.allclose(withqc["adc"], [11.5, 22.5])
     # two probing queries with different qc: each row offsets by ITS
     # qc only
     two = pd.DataFrame({"list_id": [9, 9], "query_id": [7, 8],
-                        "qtab": [qtab, qtab], "qc": [0.5, -1.0]})
-    out = (S._pq_list_scorer(2, m, ksub)(members, two)
+                        "qunit": [np.ones(m)] * 2, "qc": [0.5, -1.0]})
+    out = (score(members, two)
            .sort_values(["query_id", "neighbor_id"])
            .reset_index(drop=True))
     assert np.allclose(out["adc"], [11.5, 22.5, 10.0, 21.0])
@@ -764,14 +779,13 @@ def test_pq_encode_matches_numpy_argmin(spark, emb):
             assert set(got[uid]) == set(by_sub), uid
 
 
-def test_pq_list_scorer_qunit_mode_matches_qtab_mode():
-    """The round-11 qunit wire (probe rows carry the float32 unit
-    vector; the scorer rebuilds the ADC table in-task from the
-    closed-over codebook) must emit EXACTLY what the precomputed-qtab
-    wire emits when the hand-fed qtab is built by the same
-    qsub @ cent^T products — the wire format is the only thing that
-    changed, never the scores. Covers the qc offset in qunit mode
-    too. Pure pandas — no SparkSession."""
+def test_pq_list_scorer_matches_numpy_adc():
+    """The scorer's rebuilt-table ADC (probe rows carry the unit
+    vector; the table comes from the codebook, closed over or in-band)
+    must equal a NumPy brute force of the ADC definition —
+    qc + Σ over the member's present subspaces of q_s · cent[s, code] —
+    under the emit contract: per query the top-(rerank+1) by
+    (adc desc, id asc), self dropped. Pure pandas — no SparkSession."""
     import numpy as np
     import pandas as pd
 
@@ -780,28 +794,34 @@ def test_pq_list_scorer_qunit_mode_matches_qtab_mode():
     dim = m * dsub
     cent = rng.normal(size=(m, ksub, dsub))
     qmat = rng.normal(size=(nq, dim))
-    qsub = qmat.reshape(nq, m, dsub)
-    qtabs = np.zeros((nq, m * ksub))
-    for s in range(m):
-        qtabs[:, s * ksub:(s + 1) * ksub] = qsub[:, s, :] @ cent[s].T
     codes = [{s: int(rng.integers(ksub)) for s in range(m)
               if rng.random() < 0.85}
              for _ in range(nm)]
     members = pd.DataFrame({"list_id": [1] * nm, "id": np.arange(nm),
                             "codes": codes})
     qc = rng.normal(size=nq)
-    via_qtab = pd.DataFrame({"list_id": [1] * nq,
-                             "query_id": np.arange(nq),
-                             "qtab": list(qtabs), "qc": qc})
     via_qunit = pd.DataFrame({"list_id": [1] * nq,
                               "query_id": np.arange(nq),
                               "qunit": list(qmat), "qc": qc})
-    a = (S._pq_list_scorer(rerank, m, ksub)(members, via_qtab)
-         .sort_values(["query_id", "neighbor_id"]).reset_index(drop=True))
-    b = (S._pq_list_scorer(rerank, m, ksub, cent=cent)(members, via_qunit)
-         .sort_values(["query_id", "neighbor_id"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, b)
-    assert len(a) > 0
+    rows = []
+    for q in range(nq):
+        adc = [qc[q] + sum(float(qmat[q, s * dsub:(s + 1) * dsub]
+                                 @ cent[s, c]) for s, c in codes[x].items())
+               for x in range(nm)]
+        top = sorted((-a, x) for x, a in enumerate(adc))[:rerank + 1]
+        rows += [(q, x, -neg) for neg, x in top if x != q]
+    want = pd.DataFrame(rows, columns=["query_id", "neighbor_id", "adc"])
+
+    def check(got):
+        got = got.sort_values(["query_id", "neighbor_id"]).reset_index(
+            drop=True)
+        exp = want.sort_values(["query_id", "neighbor_id"]).reset_index(
+            drop=True)
+        assert got[["query_id", "neighbor_id"]].values.tolist() == \
+            exp[["query_id", "neighbor_id"]].values.tolist()
+        assert np.allclose(got["adc"], exp["adc"], rtol=0, atol=1e-12)
+
+    check(S._pq_list_scorer(rerank, m, ksub, cent=cent)(members, via_qunit))
     # the IN-BAND codebook wire — what ann_ivfpq_topk actually ships
     # (a per-list `_cb`-flagged probe row whose qunit field is the
     # flattened dense slot-scattered codebook; keeps query
@@ -812,9 +832,7 @@ def test_pq_list_scorer_qunit_mode_matches_qtab_mode():
          pd.DataFrame({"list_id": [1], "query_id": [-1],
                        "qunit": [cent.reshape(-1)], "qc": [0.0],
                        "_cb": [True]})], ignore_index=True)
-    c = (S._pq_list_scorer(rerank, m, ksub)(members, via_inband)
-         .sort_values(["query_id", "neighbor_id"]).reset_index(drop=True))
-    pd.testing.assert_frame_equal(a, c)
+    check(S._pq_list_scorer(rerank, m, ksub)(members, via_inband))
     # a list whose probe group is ONLY the codebook row (no real
     # queries probed it) must emit empty, not error
     only_cb = via_inband[via_inband["_cb"]]

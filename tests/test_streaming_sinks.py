@@ -141,52 +141,6 @@ def test_neardup_batch_retry_is_idempotent(spark, sf_dir, tmp_path):
     assert len({r.doc_id for r in all_v}) == len(all_v)
 
 
-def test_tws_equals_apply_in_pandas(spark, sf_dir):
-    """The transformWithStateInPandas TTL dedup must drain to exactly
-    the applyInPandasWithState operator's output (same keys, same
-    verdicts). Runs only where the protobuf-framed state protocol can
-    (tws_available); everywhere else the processor is still
-    import-validated by test_tws_builds_unlinked below."""
-    import pytest
-    from distributed_deduplicator_spark.streaming.dedup_stream import (
-        events_stream, run_stream_to_df)
-    from distributed_deduplicator_spark.streaming.stateful import (
-        ttl_dedup_stateful, ttl_dedup_tws, tws_available)
-    if not tws_available():
-        pytest.skip("google.protobuf absent — transformWithState's "
-                    "state protocol cannot run in this container")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        old = run_stream_to_df(ttl_dedup_stateful(
-            events_stream(spark, sf_dir), 86400, evict_state=False),
-            spark)
-        new = run_stream_to_df(ttl_dedup_tws(
-            events_stream(spark, sf_dir), 86400, evict_state=False),
-            spark)
-        assert sorted(map(tuple, old.collect())) == \
-            sorted(map(tuple, new.collect()))
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_tws_builds_unlinked(spark, sf_dir):
-    """Constructing the transformWithState plan must succeed even where
-    the protobuf runtime is absent (failure belongs at stream start,
-    not import/plan time) — locks the operator's API usage against
-    pyspark upgrades."""
-    from distributed_deduplicator_spark.streaming.dedup_stream import (
-        events_stream)
-    from distributed_deduplicator_spark.streaming.stateful import (
-        ttl_dedup_tws)
-    df = ttl_dedup_tws(events_stream(spark, sf_dir), 86400,
-                       evict_state=False)
-    assert set(df.columns) == {"user_id", "event_type", "ts",
-                               "event_id", "verdict"}
-
-
 def test_ttl_dedup_stateful_multichunk_group_order(spark, tmp_path):
     """A key whose micro-batch rows span multiple Arrow chunks must
     still walk the TTL recurrence in global (ts, event_id) order.
@@ -438,30 +392,44 @@ def test_no_data_batch_rejects_tws_timers(spark, sf_dir):
     processingTime) defers its timer emissions past the last data
     batch, so no_data_batch=False must reject it — in BOTH append and
     update mode. Spark prints TWS's TimeMode as bare ProcessingTime /
-    EventTime (not the GroupStateTimeout spellings), which is exactly
-    the spelling gap ADVICE r8 flagged. Plan-build needs no protobuf,
-    so this runs everywhere. The timer-free TWS plan (timeMode=none)
-    must stay legal at guard level (it fails later only where protobuf
-    is absent, which is a capability gate, not the guard's business)."""
+    EventTime (not the GroupStateTimeout spellings), so the guard must
+    match both. Plan-build needs no protobuf, so this runs everywhere. The timer-free TWS plan (timeMode=none)
+    must stay legal at guard level: where protobuf is absent it fails
+    later, in the state runtime, which is not the guard's business."""
+    from pyspark.sql.streaming.stateful_processor import (
+        StatefulProcessor)
+
     from distributed_deduplicator_spark.streaming.dedup_stream import (
         events_stream, run_stream_to_df)
     from distributed_deduplicator_spark.streaming.stateful import (
-        ttl_dedup_tws, tws_available)
+        OUT_SCHEMA)
 
-    ev = events_stream(spark, sf_dir)
-    timed = ttl_dedup_tws(ev, 60, evict_state=True)
+    class Passthrough(StatefulProcessor):
+        def init(self, handle):
+            pass
+
+        def handleInputRows(self, key, rows, timer_values):
+            yield from rows
+
+    def tws(time_mode):
+        return (events_stream(spark, sf_dir)
+                .select("user_id", "event_type", "ts", "event_id",
+                        F.lit("SUCCESS").alias("verdict"))
+                .groupBy("user_id", "event_type")
+                .transformWithStateInPandas(
+                    Passthrough(), outputStructType=OUT_SCHEMA,
+                    outputMode="append", timeMode=time_mode))
+
+    timed = tws("processingTime")
     with pytest.raises(ValueError, match="no_data_batch"):
         run_stream_to_df(timed, spark, no_data_batch=False)
     with pytest.raises(ValueError, match="no_data_batch"):
         run_stream_to_df(timed, spark, output_mode="update",
                          no_data_batch=False)
-    if not tws_available():
-        # guard-level legality of the timer-free plan: the rejection
-        # must come from the state runtime (protobuf), NOT the guard
-        untimed = ttl_dedup_tws(ev, 60, evict_state=False)
-        with pytest.raises(Exception) as exc_info:
-            run_stream_to_df(untimed, spark, no_data_batch=False)
-        assert "no_data_batch" not in str(exc_info.value)
+    try:
+        run_stream_to_df(tws("none"), spark, no_data_batch=False)
+    except Exception as exc:
+        assert "no_data_batch" not in str(exc)
 
 
 def test_no_data_batch_update_mode_scope(spark, sf_dir):
