@@ -12,23 +12,27 @@ operators. Where the reference throws ``DuplicateException`` /
 Scale notes (100 TB): every operator here is a single hash-shuffle by the
 dedup keys followed by a window or map-side-combinable aggregate — no
 driver round-trips, no collects, no Python in the hot path except the one
-genuinely sequential recurrence (``dedup_within_ttl``), which is
-Arrow-batched ``applyInPandas`` and parallel across keys. Skewed keys are
-handled by AQE skew-join/partition-splitting (session.py); the
-reference's "burst absorber" (CachedDuplicateBurstAbsorber.kt:10-23) is
-subsumed by Spark's map-side partial aggregation before the shuffle.
+genuinely sequential recurrence (``dedup_within_ttl``), one vectorised
+kernel per Arrow batch, linear in a key's attempts and shared with the
+stream. Skewed keys are handled by AQE skew-join/partition-splitting
+(session.py); the reference's "burst absorber"
+(CachedDuplicateBurstAbsorber.kt:10-23) is subsumed by Spark's map-side
+partial aggregation before the shuffle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import math
+import numbers
+from collections.abc import Iterator, Sequence
+from fractions import Fraction
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from distributed_deduplicator_spark.functions.timeutil import ts_micros
 
 # Reference state codes: provider/DeduplicationProvider.kt:250-257.
 STATE_SUCCESS = 1
@@ -235,110 +239,144 @@ def dedup_incremental(batch: DataFrame, ledger: DataFrame,
 # TTL-horizon dedup (reference R12) — the one genuinely custom operator.
 # ---------------------------------------------------------------------------
 
+# A TTL <= 0 keeps a claim forever: as µs, the largest int64 (~292,000
+# years), a horizon no real timestamp reaches.
+TTL_FOREVER_US = int(np.iinfo(np.int64).max)
+
+
+def ttl_micros(ttl_seconds: float) -> int:
+    """A TTL in seconds as whole µs (at least 1, fractions rounded to
+    the µs), the unit both the batch and the streaming recurrence
+    compare in; ``<= 0`` maps to :data:`TTL_FOREVER_US`."""
+    if isinstance(ttl_seconds, bool) or not (isinstance(
+            ttl_seconds, numbers.Real) and math.isfinite(ttl_seconds)):
+        raise ValueError(f"not a finite number of seconds: {ttl_seconds!r}")
+    if ttl_seconds <= 0:
+        return TTL_FOREVER_US
+    return min(max(1, round(Fraction(ttl_seconds) * 1_000_000)),
+               TTL_FOREVER_US)
+
+
+def ttl_accept(ts_us: np.ndarray, null: np.ndarray, starts: np.ndarray,
+               ttl_us: int, last_us: int | None,
+               ) -> tuple[np.ndarray, int | None]:
+    """The TTL recurrence over runs of rows: a row is accepted iff no
+    accepted row of its run lies less than ``ttl_us`` before it.
+
+    ``ts_us``: int64 µs, ascending within each run; run ``i`` is rows
+    ``starts[i]:starts[i+1]`` (``starts[0] == 0``, runs may be empty).
+    ``last_us`` is carried into the first run. ``null`` rows come first
+    in their run; each is accepted and moves no horizon. Returns the
+    accepted mask and the final run's last accepted µs.
+
+    Rows are keyed ``run·(d+2) + rank`` (rank among the ``d`` distinct
+    timestamps, 0 for null), ascending over the whole array, so one
+    ``searchsorted`` finds each row's successor (the first row of its
+    run at or past its horizon); each step is then one gather.
+    """
+    n = len(ts_us)
+    starts = np.asarray(starts, dtype=np.int64)
+    lens = np.diff(starts, append=n)
+    values = np.unique(ts_us[~null])
+    runs = np.arange(len(starts), dtype=np.int64) * (len(values) + 2)
+    key = np.repeat(runs, lens) + np.where(
+        null, 0, np.searchsorted(values, ts_us) + 1)
+    cap = TTL_FOREVER_US - ttl_us  # a horizon past int64 is unreachable
+
+    def first_past(runs: np.ndarray, after_us: np.ndarray) -> np.ndarray:
+        rank = np.searchsorted(values, np.minimum(after_us, cap) + ttl_us)
+        rank[after_us > cap] = len(values)
+        return np.searchsorted(key, runs + rank + 1)
+
+    ends = starts + lens
+    nxt = first_past(np.repeat(runs, lens), ts_us)
+    nxt[nxt >= np.repeat(ends, lens)] = n  # past its run: done
+    pos = np.searchsorted(key, runs + 1)  # each run's first timed row
+    if last_us is not None:
+        pos[:1] = first_past(runs[:1], np.array([last_us]))
+    pos = pos[pos < ends]
+    accepted = np.zeros(n, dtype=bool)
+    while pos.size:
+        accepted[pos] = True
+        pos = nxt[pos]
+        pos = pos[pos < n]
+    final = starts[-1] + np.flatnonzero(accepted[starts[-1]:])
+    last_us = (int(ts_us[final[-1]]) if final.size
+               else last_us if len(starts) == 1 else None)
+    return accepted | null, last_us
+
+
+def _same_key(prev: list[pa.Array], cur: list[pa.Array]) -> np.ndarray:
+    """Row-wise key equality as in a Spark GROUP BY: null matches null,
+    NaN matches NaN (tested with ``is_nan``, never by value)."""
+    same = np.ones(len(cur[0]), dtype=bool)
+    for a, b in zip(prev, cur):
+        eq = pc.or_(pc.fill_null(pc.equal(a, b), False),
+                    pc.and_(a.is_null(), b.is_null()))
+        if pa.types.is_floating(a.type):
+            eq = pc.or_(eq, pc.fill_null(
+                pc.and_(pc.is_nan(a), pc.is_nan(b)), False))
+        same &= eq.to_numpy(zero_copy_only=False)
+    return same
+
+
 def dedup_within_ttl(df: DataFrame,
                      keys: Sequence[str],
                      ts_col: str,
-                     ttl_seconds: int,
+                     ttl_seconds: float,
                      order_by: Sequence[str] | None = None,
-                     verdict_col: str = "verdict",
-                     impl: str = "jvm") -> DataFrame:
+                     verdict_col: str = "verdict") -> DataFrame:
     """TTL-horizon dedup: a key is re-claimable once the horizon passes.
 
     Reference semantics (usingTtl, DeduplicationProvider.kt:203,219;
     README.md:44): an attempt is a DUPLICATE only if a previously
-    *accepted* attempt for the same key lies within ``ttl_seconds``
-    before it; once the horizon expires the key is fresh again
-    (``ttl_seconds <= 0`` = keep forever → plain first-wins).
+    *accepted* attempt for the same key lies less than ``ttl_seconds``
+    before it. ``ttl_seconds <= 0`` keeps a claim forever (first-wins);
+    fractions count to the µs. Null keys group as one key; a null
+    timestamp sorts first and is always SUCCESS.
 
-    "Accepted" makes this a data-dependent recurrence (the horizon
-    restarts only from accepted rows), which plain window frames cannot
-    express. Two implementations, identical semantics:
-
-    - ``impl='jvm'`` (default): collect each key's attempts into a
-      sorted array and run the recurrence as an ``aggregate`` fold —
-      stays entirely JVM-side (no Python round-trip), one shuffle.
-      ~10× faster than the Arrow path at sf0.1.
-    - ``impl='arrow'``: ``applyInPandas`` per key group — the escape
-      hatch when per-key logic outgrows what a fold can express.
-
-    Both are sequential within a key (exactly like the reference,
-    where a key's attempts serialize through one Cassandra partition)
-    and fully parallel across keys — the only axis that matters at
-    100 TB. Per-key attempt lists must fit in executor memory (same
-    bound the reference's wide-row partition has).
-
-    ``order_by`` defaults to ``[ts_col]``; pass an extra unique column
-    (e.g. event_id) for a deterministic total order.
+    Plan: one hash exchange on ``keys`` (atomic columns), a sort within
+    partitions, then one ``mapInArrow`` call per partition (a Python
+    task has a fixed start-up cost) running :func:`ttl_accept` over
+    each Arrow batch's key runs, the last key's horizon carried into
+    the next batch. The sort spills and Python holds one batch at a
+    time, so a hot key costs time linear in its attempts and no per-key
+    memory. The µs are the Arrow timestamp's own values (UTC for
+    TIMESTAMP, wall clock for TIMESTAMP_NTZ): no extra column crosses
+    the exchange. ``order_by`` (default ``[ts_col]``) must start with
+    ``ts_col``; add a unique column for a deterministic total order.
     """
-    if ttl_seconds <= 0:
-        order = list(order_by) if order_by else [ts_col]
-        return dedup_first_wins(df, keys, order, verdict_col=verdict_col)
+    ttl_us = ttl_micros(ttl_seconds)
     order = list(order_by) if order_by else [ts_col]
-    if impl == "jvm":
-        return _ttl_jvm(df, keys, ts_col, ttl_seconds, order, verdict_col)
-    if impl == "arrow":
-        return _ttl_arrow(df, keys, ts_col, ttl_seconds, order, verdict_col)
-    raise ValueError("impl must be 'jvm' or 'arrow'")
+    if order[0] != ts_col:
+        raise ValueError(f"order_by must start with {ts_col!r}: {order}")
+    if not isinstance(df.schema[ts_col].dataType,
+                      (T.TimestampType, T.TimestampNTZType)):
+        raise ValueError(f"{ts_col!r} must be a TIMESTAMP(_NTZ) column")
+    keys = list(keys)
+    staged = df.repartition(*keys).sortWithinPartitions(*keys, *order)
+    out_schema = T.StructType(df.schema.fields + [
+        T.StructField(verdict_col, T.StringType(), False)])
+    verdicts = pa.array([STATE_NAMES[STATE_DUPLICATE],
+                         STATE_NAMES[STATE_SUCCESS]])
 
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tail, last = None, None  # previous batch's final key and horizon
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            kc = [b.column(k) for k in keys]
+            starts = np.flatnonzero(np.concatenate(([True], ~_same_key(
+                [c[:-1] for c in kc], [c[1:] for c in kc]))))
+            if tail is None or not _same_key(tail, [c[:1] for c in kc])[0]:
+                last = None
+            ts = b.column(ts_col).cast(pa.int64())
+            accepted, last = ttl_accept(
+                ts.fill_null(0).to_numpy(),
+                ts.is_null().to_numpy(zero_copy_only=False),
+                starts, ttl_us, last)
+            tail = [c[-1:] for c in kc]
+            yield b.append_column(verdict_col, verdicts.take(
+                pa.array(accepted.view(np.int8))))
 
-def _ttl_jvm(df: DataFrame, keys: Sequence[str], ts_col: str,
-             ttl_seconds: int, order: list[str], verdict_col: str) -> DataFrame:
-    """JVM fold: sort_array(collect_list) per key, then an aggregate()
-    recurrence computing the accepted-attempt bitmask."""
-    success, duplicate = STATE_NAMES[STATE_SUCCESS], STATE_NAMES[STATE_DUPLICATE]
-    ttl_us = int(ttl_seconds) * 1_000_000
-    payload = [c for c in df.columns if c not in keys and c not in order]
-    packed = F.struct(*[F.col(c) for c in order], *[F.col(c) for c in payload])
-    grouped = df.groupBy(*keys).agg(
-        F.sort_array(F.collect_list(packed)).alias("_attempts"))
-
-    # fold state: (last accepted ts in µs or null, verdicts array)
-    init = F.named_struct(
-        F.lit("last"), F.lit(None).cast("long"),
-        F.lit("verdicts"), F.array().cast("array<string>"))
-
-    def step(acc, attempt):
-        t_us = ts_micros(attempt[ts_col])
-        accepted = acc["last"].isNull() | (t_us - acc["last"] >= ttl_us)
-        return F.named_struct(
-            F.lit("last"), F.when(accepted, t_us).otherwise(acc["last"]),
-            F.lit("verdicts"),
-            F.concat(acc["verdicts"],
-                     F.array(F.when(accepted, F.lit(success))
-                              .otherwise(F.lit(duplicate)))))
-
-    folded = grouped.withColumn(
-        "_v", F.aggregate(F.col("_attempts"), init, step)["verdicts"])
-    exploded = (folded
-                .select(*keys,
-                        F.explode(F.arrays_zip("_attempts", "_v")).alias("_z"))
-                .select(*keys,
-                        *[F.col(f"_z._attempts.{c}").alias(c)
-                          for c in order + payload],
-                        F.col("_z._v").alias(verdict_col)))
-    return exploded.select(*df.columns, verdict_col)
-
-
-def _ttl_arrow(df: DataFrame, keys: Sequence[str], ts_col: str,
-               ttl_seconds: int, order: list[str], verdict_col: str) -> DataFrame:
-    """Arrow-batched applyInPandas recurrence (per-key python)."""
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField(verdict_col, T.StringType(), False)])
-    success, duplicate = STATE_NAMES[STATE_SUCCESS], STATE_NAMES[STATE_DUPLICATE]
-
-    def accept(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        verdicts = []
-        last_accepted = None
-        horizon = pd.Timedelta(seconds=ttl_seconds)
-        for t in pdf[ts_col].to_numpy():
-            if last_accepted is None or (t - last_accepted) >= horizon:
-                verdicts.append(success)
-                last_accepted = t
-            else:
-                verdicts.append(duplicate)
-        pdf = pdf.copy()
-        pdf[verdict_col] = verdicts
-        return pdf
-
-    return df.groupBy(*keys).applyInPandas(accept, schema=out_schema)
+    return staged.mapInArrow(run, out_schema)

@@ -203,8 +203,9 @@ FROM walk
 def q_dedup_within_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TTL-horizon dedup (usingTtl, DeduplicationProvider.kt:203,219;
     README.md:44): key becomes re-claimable once the last accepted
-    attempt is older than the TTL. applyInPandas recurrence — sequential
-    within key (like a Cassandra partition), parallel across keys."""
+    attempt is older than the TTL. One vectorised kernel per partition
+    (mapInArrow over key-sorted rows): sequential within a key, like a
+    Cassandra partition, and parallel across keys."""
     ev = _events(spark, sf_dir).select("user_id", "event_type", "ts", "event_id")
     return D.dedup_within_ttl(ev, ["user_id", "event_type"], "ts",
                               ttl_seconds=_TTL_SECONDS,

@@ -458,8 +458,8 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE shuffle. Each user's stage events are gathered
     once (sort_array(collect_list)) and the three stage timestamps
     fall out of a single JVM ``aggregate()`` fold over the sorted
-    attempts — the same recurrence pattern as the TTL arbiter
-    (operators/dedup.py _ttl_jvm). The oracle computes the identical
+    attempts; its accumulator is three longs, so the fold is linear in
+    a user's events. The oracle computes the identical
     semantics the relational way (three min-chained grouped subqueries)
     — two independent constructions, one answer. Strict '>' between
     stages in both. Counts are exact ints; the two conversion ratios

@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from distributed_deduplicator_spark.operators.dedup import (
+    TTL_FOREVER_US, ttl_accept, ttl_micros)
+
 OUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
     T.StructField("event_type", T.StringType()),
@@ -35,57 +38,13 @@ STATE_SCHEMA = T.StructType([
 ])
 
 
-def _ttl_verdicts(ts_us: np.ndarray, last_us: int | None,
-                  ttl_us: int) -> tuple[list[str], int | None]:
-    """The per-key TTL recurrence over an ascending µs timestamp array:
-    accept a row iff it is ≥ ttl after the last accepted one.
-
-    The recurrence is data-dependent and sequential per key, but on a
-    SORTED array every row between two acceptances is a DUPLICATE by
-    construction — so instead of visiting each row in Python, jump
-    straight from one acceptance to the next with searchsorted (first
-    index with ts ≥ last_accepted + ttl). Cost is O(accepted · log n)
-    numpy calls rather than an n-iteration Python loop; on the
-    duplicate-heavy keys the TTL drain exists for, acceptances ≪ rows.
-    The max(· , i+1) guard keeps ttl=0 progressing (threshold equals
-    the current row there, and every row is then an acceptance).
-    Identity with the row-at-a-time loop is property-gated in
-    tests/test_streaming_sinks.py.
-
-    Returns (verdicts, new_last_us); last_us passes through unchanged
-    when the batch accepts nothing, matching the old loop.
-    """
-    n = int(ts_us.shape[0])
-    verdicts = np.full(n, "DUPLICATE", dtype=object)
-    i = 0
-    if last_us is not None:
-        i = int(np.searchsorted(ts_us, last_us + ttl_us, side="left"))
-    while i < n:
-        verdicts[i] = "SUCCESS"
-        last_us = int(ts_us[i])
-        i = max(int(np.searchsorted(ts_us, last_us + ttl_us,
-                                    side="left")), i + 1)
-    return verdicts.tolist(), last_us
-
-
 def _ttl_process_group(chunks: list[pd.DataFrame], last_us: int | None,
                        ttl_us: int) -> tuple[pd.DataFrame, int | None]:
-    """One key's micro-batch rows → (verdict frame, new last_us).
-
-    This body runs once per (user_id, event_type) GROUP — ~75k times
-    per million fixture rows — so per-call pandas overhead is the
-    drain's hot loop. The obvious spelling (pd.concat → sort_values →
-    column-select.copy() → assign) costs ~1.5 ms per 13-row group;
-    pulling the four columns out as numpy arrays, lexsorting the
-    indices, and building the output frame directly from the sorted
-    arrays is ~4.5× cheaper at identical output (gated by the
-    multichunk-order test and the driver oracle). Rows must be
-    processed in GLOBAL (ts, event_id) order across chunks — a key's
-    batch arrives as multiple Arrow chunks when it exceeds
-    arrow.maxRecordsPerBatch, and sorting per chunk would walk the
-    recurrence out of order (regression test in
-    tests/test_streaming_sinks.py).
-    """
+    """One key's micro-batch rows → (verdict frame, new last_us). Runs
+    once per group, so it stays in numpy: the rows are lexsorted by
+    (ts, event_id) across ALL chunks (a key's rows arrive as several
+    Arrow chunks past arrow.maxRecordsPerBatch), then the batch
+    operator's kernel walks them as one run."""
     def col(name: str, dtype=None) -> np.ndarray:
         parts = [c[name].to_numpy(dtype=dtype) for c in chunks]
         return parts[0] if len(parts) == 1 else np.concatenate(parts)
@@ -94,26 +53,27 @@ def _ttl_process_group(chunks: list[pd.DataFrame], last_us: int | None,
     eid = col("event_id")
     order = np.lexsort((eid, ts.view("int64")))
     ts, eid = ts[order], eid[order]
-    verdicts, last_us = _ttl_verdicts(ts.view("int64") // 1000,
-                                      last_us, ttl_us)
+    accepted, last_us = ttl_accept(ts.view("int64") // 1000, np.isnat(ts),
+                                   [0], ttl_us, last_us)
     out = pd.DataFrame({
         "user_id": col("user_id")[order],
         "event_type": col("event_type")[order],
         "ts": ts,
         "event_id": eid,
-        "verdict": verdicts,
+        "verdict": np.where(accepted, "SUCCESS", "DUPLICATE"),
     })
     return out, last_us
 
 
-def ttl_dedup_stateful(events: DataFrame, ttl_seconds: int,
+def ttl_dedup_stateful(events: DataFrame, ttl_seconds: float,
                        evict_state: bool = True) -> DataFrame:
     """Streaming exact TTL dedup on (user_id, event_type).
 
     State = last accepted timestamp (µs) per key. Within a micro-batch
     rows are processed in (ts, event_id) order, so replaying the whole
     fixture through one availableNow batch produces exactly the batch
-    operator's output (oracle-checkable).
+    operator's output (oracle-checkable), for any TTL ``ttl_micros``
+    accepts (``<= 0`` keeps a claim forever and never evicts it).
 
     ``evict_state=True`` (production default) bounds state to live keys
     via a processing-time timeout of one TTL: a key idle for a full
@@ -124,7 +84,8 @@ def ttl_dedup_stateful(events: DataFrame, ttl_seconds: int,
     fires, defeating run-to-completion termination, and a drained
     query's state dies with it regardless.
     """
-    ttl_us = ttl_seconds * 1_000_000
+    ttl_us = ttl_micros(ttl_seconds)
+    evict = evict_state and ttl_us != TTL_FOREVER_US
 
     def fn(key: Any, pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
@@ -139,11 +100,11 @@ def ttl_dedup_stateful(events: DataFrame, ttl_seconds: int,
         yield out
         if last_us is not None:
             state.update((last_us,))
-            if evict_state:
+            if evict:
                 # bounds state to live keys in a continuous stream
-                state.setTimeoutDuration(ttl_seconds * 1000)
+                state.setTimeoutDuration(max(1, ttl_us // 1000))
 
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout if evict_state
+    timeout = (GroupStateTimeout.ProcessingTimeTimeout if evict
                else GroupStateTimeout.NoTimeout)
     return (events.groupBy("user_id", "event_type")
             .applyInPandasWithState(

@@ -2,9 +2,9 @@
 pure-Python reference models, over randomized attempt logs.
 
 SURVEY.md §5: the reference has no property tests; we add them because
-our TTL-horizon recurrence is the one genuinely custom operator — and
-it ships two implementations (JVM fold / Arrow applyInPandas) that must
-agree with each other and with a sequential model.
+our TTL-horizon recurrence is the one genuinely custom operator: a
+vectorised kernel over Arrow batches that must agree with a sequential
+model however keys fall across batches.
 """
 
 import pytest
@@ -48,11 +48,12 @@ def _model_first_wins(log):
 
 
 def _model_ttl(log, ttl_s):
-    """sequential accepted-horizon recurrence per key."""
+    """sequential accepted-horizon recurrence per key (any hashable
+    key, None included); ttl <= 0 keeps a claim forever."""
     out = {}
     last = {}
-    for k, s, a in sorted(log, key=lambda r: (r[0], r[1], f"a{r[2]:07d}")):
-        if k not in last or s - last[k] >= ttl_s:
+    for k, s, a in sorted(log, key=lambda r: (r[1], f"a{r[2]:07d}")):
+        if k not in last or 0 < ttl_s <= s - last[k]:
             last[k] = s
             out[(k, s, a)] = "SUCCESS"
         else:
@@ -75,22 +76,39 @@ def test_first_wins_matches_model(spark, log):
     assert got == _model_first_wins(log)
 
 
+# two-column (string, int) keys, nulls included, so that one key is
+# two Arrow columns and null keys must still group as one key
+two_col_attempts = st.lists(
+    st.tuples(st.tuples(st.sampled_from(["k1", "k2", None]),
+                        st.sampled_from([0, 1])),
+              st.integers(min_value=0, max_value=5000),
+              st.integers(min_value=0, max_value=10**6)),
+    min_size=1, max_size=60, unique_by=lambda r: r[2])
+
+
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
-@given(log=attempts, ttl=st.sampled_from([1, 60, 900, 3600]))
-@pytest.mark.full  # three-way equality sweep; the JVM default path
-# is golden-tested and driver-oracle-checked every round
-def test_ttl_jvm_and_arrow_match_model(spark, log, ttl):
-    df = _df(spark, log)
-    model = _model_ttl(log, ttl)
-    jvm = _collect(D.dedup_within_ttl(df, ["key"], "ts", ttl,
-                                      order_by=["ts", "attempt_id"],
-                                      impl="jvm"))
-    assert jvm == model
-    arrow = _collect(D.dedup_within_ttl(df, ["key"], "ts", ttl,
-                                        order_by=["ts", "attempt_id"],
-                                        impl="arrow"))
-    assert arrow == model
+@given(log=two_col_attempts, ttl=st.sampled_from([0, 1, 60, 900, 3600]))
+def test_ttl_matches_model(spark, log, ttl):
+    """The one TTL path against the sequential model, with Arrow
+    batches of 3 rows so that keys straddle batch boundaries and the
+    horizon must carry across them."""
+    df = spark.createDataFrame(
+        [(ks, ki, BASE + dt.timedelta(seconds=s), f"a{a:07d}")
+         for (ks, ki), s, a in log], "ks string, ki int, ts timestamp, "
+        "attempt_id string")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        got = {((r.ks, r.ki), int((r.ts - BASE).total_seconds()),
+                int(r.attempt_id[1:])): r.verdict
+               for r in D.dedup_within_ttl(
+                   df, ["ks", "ki"], "ts", ttl,
+                   order_by=["ts", "attempt_id"]).collect()}
+    finally:
+        spark.conf.set(conf, old)
+    assert got == _model_ttl(log, ttl)
 
 
 def _model_incremental(batch, ledger_keys):

@@ -488,40 +488,94 @@ def test_drain_shuffle_partitions_directory_source(spark, sf_dir,
 
 
 def test_ttl_verdicts_matches_naive_loop():
-    """The searchsorted jump kernel must equal the row-at-a-time TTL
-    recurrence on arbitrary sorted inputs, ttls, and carried state —
-    including ttl=0 (everything accepted) and heavy ties."""
+    """The vectorised TTL kernel must equal the row-at-a-time
+    recurrence run separately on each run, on arbitrary sorted runs
+    (empty ones included), ttls, null timestamps and state carried into
+    the first run — including heavy ties, a horizon past int64 and
+    ttl_micros(0), which keeps a claim forever."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
     import numpy as np
 
-    from distributed_deduplicator_spark.streaming.stateful import (
-        _ttl_verdicts)
+    from distributed_deduplicator_spark.operators.dedup import (
+        TTL_FOREVER_US, ttl_accept)
 
-    def naive(ts_us, last_us, ttl_us):
-        verdicts = []
-        for t_us in ts_us:
-            t_us = int(t_us)
-            if last_us is None or t_us - last_us >= ttl_us:
-                verdicts.append("SUCCESS")
+    def naive(ts_us, null, last_us, ttl_us):
+        accepted = []
+        for t_us, is_null in zip(ts_us, null):
+            if is_null:
+                accepted.append(True)
+            elif last_us is None or t_us - last_us >= ttl_us:
+                accepted.append(True)
                 last_us = t_us
             else:
-                verdicts.append("DUPLICATE")
-        return verdicts, last_us
+                accepted.append(False)
+        return accepted, last_us
 
-    @settings(max_examples=200, deadline=None)
+    big = TTL_FOREVER_US - 200
+    run_st = st.lists(st.tuples(
+        st.one_of(st.integers(min_value=0, max_value=300),
+                  st.integers(min_value=big, max_value=TTL_FOREVER_US)),
+        st.booleans()), max_size=30)
+
+    @settings(max_examples=300, deadline=None)
     @given(
-        ts=st.lists(st.integers(min_value=0, max_value=300),
-                    max_size=60),
-        ttl=st.integers(min_value=0, max_value=100),
+        runs=st.lists(run_st, min_size=1, max_size=6),
+        ttl=st.one_of(st.integers(min_value=1, max_value=100),
+                      st.just(TTL_FOREVER_US)),
         last=st.one_of(st.none(),
                        st.integers(min_value=-50, max_value=300)),
     )
-    def check(ts, ttl, last):
-        arr = np.sort(np.asarray(ts, dtype="int64"))
-        got_v, got_last = _ttl_verdicts(arr, last, ttl)
-        want_v, want_last = naive(arr, last, ttl)
-        assert got_v == want_v
+    def check(runs, ttl, last):
+        runs = [sorted(r, key=lambda x: (not x[1], x[0])) for r in runs]
+        ts = np.asarray([t for r in runs for t, _ in r], dtype="int64")
+        null = np.asarray([n for r in runs for _, n in r], dtype=bool)
+        starts = np.cumsum([0] + [len(r) for r in runs[:-1]])
+        got, got_last = ttl_accept(ts, null, starts, ttl, last)
+        want, carry = [], last
+        for r in runs:
+            acc, carry = naive([t for t, _ in r], [n for _, n in r],
+                               carry, ttl)
+            want += acc
+            carry = None  # state carries into the first run only
+        assert got.tolist() == want
+        want_last = naive([t for t, _ in runs[-1]],
+                          [n for _, n in runs[-1]],
+                          last if len(runs) == 1 else None, ttl)[1]
         assert got_last == want_last
 
     check()
+
+
+def test_ttl_batch_and_stream_agree(spark, tmp_path):
+    """The same log drained through the stream operator and run through
+    the batch operator gives the same verdicts for fractional, zero
+    (keep forever) and whole-second TTLs. ttl=0 drains with the default
+    evict_state=True: a claim kept forever registers no timeout."""
+    import datetime as dt
+
+    from distributed_deduplicator_spark.operators.dedup import (
+        dedup_within_ttl)
+    from distributed_deduplicator_spark.streaming.dedup_stream import (
+        run_stream_to_df)
+    from distributed_deduplicator_spark.streaming.stateful import (
+        ttl_dedup_stateful)
+    base = dt.datetime(2024, 1, 1)
+    offsets = [0, 0.2, 0.5, 0.9, 1.0, 1.4, 2.6, 300, 599.9, 600.5, 1300]
+    rows = [(u, "click", base + dt.timedelta(seconds=s), i * 10 + u)
+            for i, s in enumerate(offsets) for u in (1, 2)]
+    src = str(tmp_path / "log")
+    spark.createDataFrame(
+        rows, "user_id long, event_type string, ts timestamp, "
+        "event_id long").write.parquet(src)
+    log = spark.read.parquet(src)
+    for ttl in (0, 0.5, 1, 600):
+        stream = spark.readStream.schema(log.schema).parquet(src)
+        drained = run_stream_to_df(
+            ttl_dedup_stateful(stream, ttl, evict_state=ttl == 0), spark)
+        batch = dedup_within_ttl(log, ["user_id", "event_type"], "ts", ttl,
+                                 order_by=["ts", "event_id"])
+        got = {r.event_id: r.verdict for r in drained.collect()}
+        want = {r.event_id: r.verdict for r in batch.collect()}
+        assert len(want) == len(rows)
+        assert got == want, ttl
